@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * KMeansSpec pins this against the literal BigDecimal formula.
   *
   * Non-finite elements: Spark's Round passes NaN/±Inf through and the
-  * kernel then applies the JVM double→long conversion (0 /
-  * ±Long.MaxValue). The ANSI HOF form instead throws CAST_OVERFLOW
+  * kernel then applies the JVM double→long conversion (NaN → 0,
+  * +Inf → Long.MaxValue, −Inf → Long.MinValue). The ANSI HOF form instead throws CAST_OVERFLOW
   * there — a deliberate divergence: on the Lloyd hot path over
   * arbitrary embeddings a poisoned element must not crash the job
   * (ADVICE r13). `BigDecimal.valueOf` would throw
@@ -61,7 +61,8 @@ object QuantizeMicro {
         val d = a.getFloat(i).toDouble * 1e6
         // Spark's Round guards NaN/Inf before BigDecimal.valueOf (which
         // throws NumberFormatException on them); the double→long cast
-        // then yields 0 / ±Long.MaxValue — mirror that exactly.
+        // then yields 0 / Long.MaxValue / Long.MinValue for NaN / +Inf /
+        // −Inf — mirror that exactly.
         out(i) =
           if (d.isNaN || d.isInfinite) d.toLong
           else java.math.BigDecimal.valueOf(d)

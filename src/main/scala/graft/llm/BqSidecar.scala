@@ -16,16 +16,13 @@ import org.apache.spark.sql.functions._
   *
   * Atomicity contract: stats and words are one logical artifact — the
   * words are only meaningful against the thresholds they were packed
-  * with — so both live inside ONE versioned directory
-  * (`bq/vNNNNNNNN/{stats,words}`) flipped by a single `_commit_` marker
-  * (the [[VectorIndex]] version pattern). A reader resolves the highest
-  * committed version and reads both tables from it; a crash anywhere in
-  * refresh leaves either the previous committed version fully intact
-  * (new dir has no marker → invisible) or the new one fully committed —
-  * never new thresholds against old words. Interrupted-refresh debris
-  * (uncommitted dirs, dangling markers) is reported/reclaimed by
-  * [[repair]] via [[graft.store.GenLedger.repairVersions]], the family
-  * discipline.
+  * with — so both live inside ONE version of the [[graft.store
+  * .VersionedDir]] at `bq/` (`bq/vNNNNNNNN/{stats,words}`, one commit
+  * marker; layout and crash contract documented there). A reader
+  * resolves the highest committed version and reads both tables from
+  * it — never new thresholds against old words. A refresh that died
+  * before its marker is invisible and is overwritten by the next
+  * refresh; [[repair]] reclaims interrupted-refresh debris.
   *
   * Freshness contract (spec-pinned): the sidecar is a SNAPSHOT of the
   * live membership at refresh time. A vector ADDED after refresh is not
@@ -50,26 +47,12 @@ import org.apache.spark.sql.functions._
   */
 object BqSidecar {
 
-  private val CommitPrefix = "_commit_"
   private val KeepVersions = 2
 
   private def bqRoot(dir: String) = s"$dir/bq"
 
-  private def fsOf(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Highest version with a commit marker — serve's single read point.
-    * (A marker is created only after both tables are fully written, so
-    * resolution never lands on a torn artifact.) */
-  private def currentVersion(spark: SparkSession, dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(bqRoot(dir))
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(CommitPrefix))
-      .sorted.lastOption.map(_.stripPrefix(CommitPrefix))
-  }
+  private def versioned(spark: SparkSession, dir: String) =
+    new graft.store.VersionedDir(spark, bqRoot(dir))
 
   private val icodeExpr =
     "transform(embedding, x -> cast(floor(cast(x as double) * 128.0D) as bigint))"
@@ -103,38 +86,25 @@ object BqSidecar {
     val words = vecs.crossJoin(broadcast(stats))
       .withColumn("word", expr(packExpr))
       .select("vec_id", "word")
-    val fs = fsOf(spark, dir)
-    val root = bqRoot(dir)
-    val next = f"v${currentVersion(spark, dir).map(_.drop(1).toInt).getOrElse(0) + 1}%08d"
-    stats.repartition(1).write.parquet(s"$root/$next/stats")
-    words.repartition(4).write.parquet(s"$root/$next/words")
-    // the commit point: both tables become visible together exactly here
-    fs.create(new org.apache.hadoop.fs.Path(root, CommitPrefix + next), true).close()
-    // reap versions beyond the retention window (marker first, so a
-    // crash mid-reap leaves an uncommitted dir — repair()'s case — and
-    // never a dangling highest marker)
-    fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName).filter(_.startsWith(CommitPrefix))
-      .sorted.dropRight(KeepVersions)
-      .foreach { m =>
-        val v = m.stripPrefix(CommitPrefix)
-        fs.delete(new org.apache.hadoop.fs.Path(root, m), false)
-        fs.delete(new org.apache.hadoop.fs.Path(root, v), true)
-      }
+    // both tables become visible together at the version's commit marker
+    versioned(spark, dir).writeNext(KeepVersions) { p =>
+      stats.repartition(1).write.parquet(s"$p/stats")
+      words.repartition(4).write.parquet(s"$p/words")
+    }
     // pre-versioned flat layout (r12): superseded, reclaim
-    fs.delete(new org.apache.hadoop.fs.Path(root, "stats"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(root, "words"), true)
+    val fs = graft.store.GenLedger.fsOf(spark, dir)
+    Seq("stats", "words").foreach(t =>
+      fs.delete(new org.apache.hadoop.fs.Path(bqRoot(dir), t), true))
   }
 
   /** Guarded repair of interrupted-refresh debris (dangling markers,
-    * uncommitted version dirs) — [[graft.store.GenLedger.repairVersions]]
+    * uncommitted version dirs) — [[graft.store.VersionedDir.repair]]
     * under the index WriterLock; `dryRun = true` (the default posture)
     * lists without touching. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): Seq[(String, String, String, Boolean)] =
     graft.store.WriterLock.forIndex(spark, dir).withLock {
-      graft.store.GenLedger
-        .repairVersions(spark, bqRoot(dir), CommitPrefix, dryRun)
+      versioned(spark, dir).repair(dryRun)
     }
 
   /** Top-`k` cosine neighbors per query (`qid`, `qe`) served from the
@@ -145,8 +115,8 @@ object BqSidecar {
     * torn pairing. */
   def serve(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 3, depth: Int = 20): DataFrame = {
-    val bqVer = currentVersion(spark, dir)
-      .map(v => s"${bqRoot(dir)}/$v")
+    val vd = versioned(spark, dir)
+    val bqVer = vd.current.map(vd.pathOf)
       .getOrElse(sys.error(s"no committed sidecar at $dir — run refresh() first"))
     val verDir = VectorIndex.live(spark, dir)
     val words = spark.read.parquet(s"$bqVer/words")

@@ -107,7 +107,6 @@ object CorpusRefresh {
   private val BatchPrefix = "_batch_"
   private val StateTables = Seq("exact", "copies", "removed", "pairs", "scrub")
 
-  private def fsOf(spark: SparkSession, p: String) = GenLedger.fsOf(spark, p)
   private def exists(spark: SparkSession, p: String) = GenLedger.hasData(spark, p)
   private def nextGen(spark: SparkSession, dir: String): Long =
     GenLedger.nextGen(spark, dir)
@@ -174,17 +173,9 @@ object CorpusRefresh {
         val c = spark.read.parquet(copiesPath(dir))
           .where(col("gen").isin(committed: _*))
           .groupBy("content_hash", "doc_id", "lang").agg(max("gen").as("gen"))
-        val rm =
-          if (!exists(spark, removedPath(dir))) None
-          else Some(spark.read.parquet(removedPath(dir))
-            .where(col("gen").isin(committed: _*))
-            .groupBy("doc_id").agg(max("gen").as("rgen")))
-        Some(rm match {
-          case None => c.select("content_hash", "doc_id", "lang")
-          case Some(r) => c.join(broadcast(r), Seq("doc_id"), "left")
-            .where(col("rgen").isNull || col("gen") > col("rgen"))
-            .select("content_hash", "doc_id", "lang")
-        })
+        Some(GenLedger.liveRows(c, "doc_id",
+          GenLedger.committedTombMax(spark, removedPath(dir), committed, "doc_id"))
+          .select("content_hash", "doc_id", "lang"))
       }
     }
   }
@@ -298,8 +289,8 @@ object CorpusRefresh {
     // its name is `_commit_<gen>` or `_commit_<gen>_<tag>` — so there is
     // no window where the refresh is committed but the id unrecorded
     // (the window that would double-count a re-fed batch)
-    fsOf(spark, dir).create(new org.apache.hadoop.fs.Path(dir,
-      CommitPrefix + gen + tag.map("_" + _).getOrElse("")), true).close()
+    GenLedger.touch(spark, dir,
+      CommitPrefix + gen + tag.map("_" + _).getOrElse(""))
     }
   } // WriterLock released here
 
@@ -420,15 +411,8 @@ object CorpusRefresh {
   def doctor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val committed = committedGens(spark, dir)
-    def torn(path: String): Long =
-      if (!exists(spark, path)) 0L
-      else {
-        val t = spark.read.parquet(path)
-        if (committed.isEmpty) t.count()
-        else t.where(!col("gen").isin(committed: _*)).count()
-      }
-    val tornRows = Seq(exactPath(dir), copiesPath(dir), removedPath(dir),
-      pairsPath(dir), scrubPath(dir)).map(torn).sum
+    val tornRows = StateTables
+      .map(t => GenLedger.tornRows(spark, s"$dir/$t", committed)).sum
     val exact = exactResolve(spark, dir)
     val liveHashes = exact.map(_.count()).getOrElse(0L)
     val liveCopies = copiesResolve(spark, dir).map(_.count()).getOrElse(0L)
@@ -442,10 +426,7 @@ object CorpusRefresh {
             .join(sc.select("doc_id"), Seq("doc_id"), "left_anti").count()
         }
     }
-    val fs = fsOf(spark, dir)
-    val staleAsides = Seq("exact", "copies", "removed", "pairs", "scrub")
-      .flatMap(t => Seq(s"$dir/$t.old", s"$dir/$t.compacting"))
-      .count(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val staleAsides = GenLedger.staleAsides(spark, dir, StateTables)
     val dedupViolations =
       if (!exists(spark, s"${dedupDir(dir)}/sigs")) 0L
       else DedupIndex.doctor(spark, dedupDir(dir)).head()
@@ -463,14 +444,9 @@ object CorpusRefresh {
     * only. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val own = graft.store.WriterLock.forIndex(spark, dir).withLock {
-      graft.store.GenLedger.repairAsides(spark, dir,
-        Seq("exact", "copies", "removed", "pairs", "scrub"), dryRun)
-    }.toDF("item", "damage", "action", "applied")
-    val ddFs = graft.store.GenLedger.fsOf(spark, dedupDir(dir))
+    val own = GenLedger.repairAsides(spark, dir, StateTables, dryRun)
     val inner =
-      if (!ddFs.exists(new org.apache.hadoop.fs.Path(dedupDir(dir)))) own.limit(0)
+      if (!exists(spark, dedupDir(dir))) own.limit(0)
       else DedupIndex.repair(spark, dedupDir(dir), dryRun)
         .withColumn("item", concat(lit("dedup/"), col("item")))
         .select("item", "damage", "action", "applied")
@@ -496,12 +472,10 @@ object CorpusRefresh {
     val oldMarkers = commitMarkerNames(spark, dir)
     if (oldMarkers.isEmpty) Map.empty
     else {
-      val fs = fsOf(spark, dir)
+      val fs = GenLedger.fsOf(spark, dir)
       // 1. batch tags outlive their markers as stubs (idempotent creates)
-      oldMarkers.flatMap(batchTagOf).foreach { t =>
-        val p = new org.apache.hadoop.fs.Path(dir, BatchPrefix + t)
-        if (!fs.exists(p)) fs.create(p, true).close()
-      }
+      oldMarkers.flatMap(batchTagOf).foreach(t =>
+        GenLedger.touch(spark, dir, BatchPrefix + t))
       // 2. commit the fold generation BEFORE any rewrite: folded rows
       // are visible the moment they land, old rows stay visible (and
       // consistent — resolution is latest-wins) until their swap
@@ -610,7 +584,7 @@ object CorpusRefresh {
     if (gens.isEmpty) return fresh()
     val key = f"g${gens.max}_j${math.round(cfg.minJaccard * 1e6)}"
     val cachePath = new org.apache.hadoop.fs.Path(s"$dir/compcache/$key")
-    val fs = fsOf(spark, dir)
+    val fs = GenLedger.fsOf(spark, dir)
     if (fs.exists(cachePath))
       return spark.read.parquet(cachePath.toString)
     val comp = fresh()
@@ -628,40 +602,33 @@ object CorpusRefresh {
     * [[CorpusEtl.prepare]]'s exact output shape (doc_id, lang,
     * n_tokens, n_copies, cluster_size, n_emails, n_phones, n_ssns,
     * redacted), equal row-for-row to the from-scratch run on every
-    * document ever refreshed in and not since removed. Id-keyed joins
-    * only; no text is re-read. */
+    * document ever refreshed in and not since removed: [[preparedMeta]]
+    * left-joined to the scrub rows. Id-keyed joins only; no text is
+    * re-read. */
   def prepared(spark: SparkSession, dir: String,
-      cfg: CorpusEtlConfig = CorpusEtlConfig()): DataFrame =
-    exactResolve(spark, dir) match {
-      case None =>
-        spark.range(0).select(col("id").as("doc_id"),
-          lit("").as("lang"), lit(0).as("n_tokens"), lit(0).as("n_copies"),
-          lit(1).as("cluster_size"), lit(0).as("n_emails"), lit(0).as("n_phones"),
-          lit(0).as("n_ssns"), lit("").as("redacted"))
-      case Some(ex) =>
-        val keepers = ex.select(col("keeper_id").as("doc_id"), col("lang"),
-          col("n_tokens"), col("n_copies"))
-        val scrub = scrubResolve(spark, dir).getOrElse(
-          spark.range(0).select(col("id").as("doc_id"),
-            lit(0).cast("int").as("n_emails"), lit(0).cast("int").as("n_phones"),
-            lit(0).cast("int").as("n_ssns"), lit("").as("redacted")))
-        canonicalOf(spark, dir, keepers, cfg)
-          .join(scrub, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_copies"),
-            col("cluster_size"), col("n_emails"), col("n_phones"), col("n_ssns"),
-            col("redacted"))
-    }
+      cfg: CorpusEtlConfig = CorpusEtlConfig()): DataFrame = {
+    val scrub = scrubResolve(spark, dir).getOrElse(
+      spark.range(0).select(col("id").as("doc_id"),
+        lit(0).cast("int").as("n_emails"), lit(0).cast("int").as("n_phones"),
+        lit(0).cast("int").as("n_ssns"), lit("").as("redacted")))
+    preparedMeta(spark, dir, cfg)
+      .join(scrub, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_copies"),
+        col("cluster_size"), col("n_emails"), col("n_phones"), col("n_ssns"),
+        col("redacted"))
+  }
 
   /** [[prepared]] restricted to the METADATA columns (doc_id, lang,
-    * n_tokens, n_copies, cluster_size) — the same keeper ROW SET with
-    * the scrub assembly skipped entirely. Catalyst cannot eliminate the
-    * scrub left join on its own (no join-elimination rule for a
-    * non-provably-unique right side), so a metadata-only consumer of
-    * [[prepared]] still pays the scrub parquet scan — redacted text
-    * included — plus its max-gen window and the join exchange, only to
-    * drop every scrub column in its projection. The p1/p1b/p2 serve
-    * path (survivor ids/langs/token counts) is exactly that consumer
-    * (guide §2.3: project before the work, not after). */
+    * n_tokens, n_copies, cluster_size) — the keeper assembly
+    * [[prepared]] is built on, with the scrub join skipped entirely.
+    * Catalyst cannot eliminate the scrub left join on its own (no
+    * join-elimination rule for a non-provably-unique right side), so a
+    * metadata-only consumer of [[prepared]] would still pay the scrub
+    * parquet scan — redacted text included — plus its max-gen window
+    * and the join exchange, only to drop every scrub column in its
+    * projection. The p1/p1b/p2 serve path (survivor ids/langs/token
+    * counts) is exactly that consumer (guide §2.3: project before the
+    * work, not after). */
   def preparedMeta(spark: SparkSession, dir: String,
       cfg: CorpusEtlConfig = CorpusEtlConfig()): DataFrame =
     exactResolve(spark, dir) match {

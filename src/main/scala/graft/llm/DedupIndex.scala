@@ -67,7 +67,7 @@ object DedupIndex {
   private def bandsPath(dir: String) = s"$dir/bands"
   private def tombsPath(dir: String) = s"$dir/tombs"
 
-  private val TcommitPrefix = "_tcommit_"
+  private val Tables = Seq("sigs", "bands")
 
   /** Reserve the next generation number ([[graft.store.GenLedger]]'s
     * marker-file counter, O(1) in index size; serialized by the index
@@ -81,43 +81,15 @@ object DedupIndex {
     graft.store.GenLedger.nextGen(spark, dir,
       graft.store.GenLedger.maxGenIn(spark, sigsPath(dir)))
 
-  /** Tombstone generations whose append COMPLETED (their `_tcommit_<n>`
-    * marker exists): a torn tombstone append — files visible, writer
-    * lost before the marker — is invisible to every reader, so a crash
-    * can never half-remove documents (DedupTombstoneSpec). */
-  private def committedTombGens(spark: SparkSession, dir: String): Seq[Long] =
-    graft.store.GenLedger.committedMarkers(spark, dir, TcommitPrefix)
-
-  /** Per-id max COMMITTED tombstone generation — None when no committed
-    * tombstones exist (the common state; every liveness filter below
-    * then vanishes from the plan). Removal-sized: always broadcast. */
-  private def tombMax(spark: SparkSession, dir: String): Option[DataFrame] = {
-    if (!exists(spark, tombsPath(dir))) None
-    else {
-      val committed = committedTombGens(spark, dir)
-      if (committed.isEmpty) None
-      else Some(spark.read.parquet(tombsPath(dir))
-        .where(col("gen").isin(committed: _*))
-        .groupBy("doc_id").agg(max("gen").as("tgen")))
-    }
-  }
-
   /** Live `sigs/` rows WITH their generation: a row is live iff no
     * committed tombstone at a later generation covers its doc_id — a
     * removed doc is dead; a removed-then-re-added doc is live through
     * exactly its re-add row. */
-  private def liveSigRows(spark: SparkSession, dir: String): Option[DataFrame] = {
+  private def liveSigRows(spark: SparkSession, dir: String): Option[DataFrame] =
     if (!exists(spark, sigsPath(dir))) None
-    else {
-      val s = readSigs(spark, dir)
-      Some(tombMax(spark, dir) match {
-        case None => s
-        case Some(t) => s.join(broadcast(t), Seq("doc_id"), "left")
-          .where(col("tgen").isNull || col("gen") > col("tgen"))
-          .drop("tgen")
-      })
-    }
-  }
+    else Some(graft.store.GenLedger.liveRows(readSigs(spark, dir), "doc_id",
+      graft.store.GenLedger.committedTombMax(spark, tombsPath(dir),
+        graft.store.GenLedger.committedTombGens(spark, dir), "doc_id")))
 
   /** `sigs/` with the legacy-schema upgrade applied: merge schemas
     * across files (a dir mixing pre-`gen`-column files with new ones
@@ -139,14 +111,11 @@ object DedupIndex {
   private def liveSigs(spark: SparkSession, dir: String): Option[DataFrame] =
     liveSigRows(spark, dir).map(_.select("doc_id", "h", "n", "sigs"))
 
-  private def fsOf(spark: SparkSession, p: String) =
-    graft.store.GenLedger.fsOf(spark, p)
-
   private def exists(spark: SparkSession, p: String): Boolean =
     graft.store.GenLedger.hasData(spark, p)
 
   private def guardCompaction(spark: SparkSession, dir: String): Unit =
-    graft.store.GenLedger.guardCompaction(spark, dir, Seq("sigs", "bands"))
+    graft.store.GenLedger.guardCompaction(spark, dir, Tables)
 
   /** Check `newDocs` (doc_id, text, …) against the index AND against
     * each other, append them to the index, and return the verified
@@ -266,10 +235,7 @@ object DedupIndex {
         .localCheckpoint(true)
       if (!victims.isEmpty) {
         val gen = nextGen(spark, dir)
-        victims.select(lit(gen).as("gen"), col("doc_id"))
-          .write.mode(SaveMode.Append).parquet(tombsPath(dir))
-        fsOf(spark, dir).create(
-          new org.apache.hadoop.fs.Path(dir, TcommitPrefix + gen), true).close()
+        graft.store.GenLedger.tombstone(spark, dir, victims, gen)
       }
     }
   } // WriterLock released here
@@ -347,10 +313,7 @@ object DedupIndex {
           // one generation serves both: tombstones match by doc_id, and
           // the new id's rows are a different id — while the old id's
           // rows (all at earlier generations) die
-          victims.select(lit(gen).as("gen"), col("doc_id"))
-            .write.mode(SaveMode.Append).parquet(tombsPath(dir))
-          fsOf(spark, dir).create(
-            new org.apache.hadoop.fs.Path(dir, TcommitPrefix + gen), true).close()
+          graft.store.GenLedger.tombstone(spark, dir, victims, gen)
         }
       }
     }
@@ -438,18 +401,9 @@ object DedupIndex {
               .count()
         }
       }
-    val tornTombs =
-      if (!exists(spark, tombsPath(dir))) 0L
-      else {
-        val committed = committedTombGens(spark, dir)
-        val t = spark.read.parquet(tombsPath(dir))
-        if (committed.isEmpty) t.count()
-        else t.where(!col("gen").isin(committed: _*)).count()
-      }
-    val fs = graft.store.GenLedger.fsOf(spark, dir)
-    val staleAsides = Seq("sigs", "bands")
-      .flatMap(t => Seq(s"$dir/$t.old", s"$dir/$t.compacting"))
-      .count(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val tornTombs = graft.store.GenLedger.tornRows(spark, tombsPath(dir),
+      graft.store.GenLedger.committedTombGens(spark, dir))
+    val staleAsides = graft.store.GenLedger.staleAsides(spark, dir, Tables)
     Seq((liveN, dups, deadSigs, deadBands, tornTombs, staleAsides))
       .toDF("live_docs", "dup_live_memberships", "reclaimable_sigs",
         "reclaimable_bands", "uncommitted_tombstone_rows", "stale_asides")
@@ -460,12 +414,7 @@ object DedupIndex {
     * `dryRun = true` lists only. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame =
-    graft.store.WriterLock.forIndex(spark, dir).withLock {
-      import spark.implicits._
-      graft.store.GenLedger
-        .repairAsides(spark, dir, Seq("sigs", "bands"), dryRun)
-        .toDF("item", "damage", "action", "applied")
-    }
+    graft.store.GenLedger.repairAsides(spark, dir, Tables, dryRun)
 
   /** Compact the append-only index (each checkAndAdd batch appends its
     * own files; a long-lived service accumulates thousands). Unlike
@@ -490,7 +439,7 @@ object DedupIndex {
     // window of the cleanup below, a stale tombstone is inert: the
     // surviving row's generation already outranks it, and a
     // fully-removed id simply has no row left to match.
-    val hasTombs = committedTombGens(spark, dir).nonEmpty
+    val hasTombs = graft.store.GenLedger.committedTombGens(spark, dir).nonEmpty
     // legacy gen-less sig files also force a real pass: the rewrite
     // re-stamps every live row at one fresh generation, retiring the
     // per-read schema merge the upgrade path otherwise pays forever
@@ -528,12 +477,7 @@ object DedupIndex {
             .select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "mh")))
             .select("band", "mh", "doc_id")
         }))
-    if (hasTombs) {
-      val fs = fsOf(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(tombsPath(dir)), true)
-      committedTombGens(spark, dir).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, TcommitPrefix + g), false))
-    }
+    if (hasTombs) graft.store.GenLedger.retireTombs(spark, dir)
     out
   } // WriterLock released here
 }

@@ -67,14 +67,11 @@ object KnnGraphIndex {
   private def graphPath(dir: String) = s"$dir/graph"
   private def tombsPath(dir: String) = s"$dir/tombs"
 
-  private def fsOf(spark: SparkSession, p: String) =
-    graft.store.GenLedger.fsOf(spark, p)
-
   private def exists(spark: SparkSession, p: String): Boolean =
     graft.store.GenLedger.hasData(spark, p)
 
   private val GcommitPrefix = "_gcommit_"
-  private val TcommitPrefix = "_tcommit_"
+  private val Tables = Seq("vectors", "graph")
 
   /** Generations whose graph append COMPLETED (their `_gcommit_<n>`
     * marker exists). Readers resolve only these, so a torn append —
@@ -85,52 +82,24 @@ object KnnGraphIndex {
     * latest-COMMITTED-gen-per-vector). The EventStore version-marker
     * scheme, applied per delta. */
   private def committedGens(spark: SparkSession, dir: String): Seq[Long] =
-    committedMarkers(spark, dir, GcommitPrefix)
-
-  /** Tombstone generations whose append COMPLETED (`_tcommit_<n>`
-    * exists) — the removal analog of [[committedGens]]: a torn tombstone
-    * append (files visible, writer lost before the marker) can never
-    * half-remove anything, because readers honor only marked
-    * generations. */
-  private def committedTombGens(spark: SparkSession, dir: String): Seq[Long] =
-    committedMarkers(spark, dir, TcommitPrefix)
-
-  private def committedMarkers(spark: SparkSession, dir: String,
-      prefix: String): Seq[Long] =
-    graft.store.GenLedger.committedMarkers(spark, dir, prefix)
+    graft.store.GenLedger.committedMarkers(spark, dir, GcommitPrefix)
 
   /** Per-id max COMMITTED tombstone generation — None when the index has
     * no committed tombstones at all (the overwhelmingly common state, so
-    * every liveness filter below vanishes from the plan). Tombstone
-    * volume is removal-sized, never corpus-sized: always broadcast. */
-  private def tombMax(spark: SparkSession, dir: String): Option[DataFrame] = {
-    if (!exists(spark, tombsPath(dir))) None
-    else {
-      val committed = committedTombGens(spark, dir)
-      if (committed.isEmpty) None
-      else Some(spark.read.parquet(tombsPath(dir))
-        .where(col("gen").isin(committed: _*))
-        .groupBy("vec_id").agg(max("gen").as("tgen")))
-    }
-  }
+    * every liveness filter below vanishes from the plan). */
+  private def tombMax(spark: SparkSession, dir: String): Option[DataFrame] =
+    graft.store.GenLedger.committedTombMax(spark, tombsPath(dir),
+      graft.store.GenLedger.committedTombGens(spark, dir), "vec_id")
 
   /** Live membership rows of `vectors/`: a row is live iff no committed
     * tombstone at a LATER generation covers its vec_id — so a removed id
     * is dead, and a removed-then-re-added id is live through exactly its
     * re-add row (the older incarnation stays dead). Tombstones are
     * superseded by later generations, never cleared in place. */
-  private def liveLedger(spark: SparkSession, dir: String): Option[DataFrame] = {
+  private def liveLedger(spark: SparkSession, dir: String): Option[DataFrame] =
     if (!exists(spark, vecPath(dir))) None
-    else {
-      val v = spark.read.parquet(vecPath(dir))
-      Some(tombMax(spark, dir) match {
-        case None => v
-        case Some(t) => v.join(broadcast(t), Seq("vec_id"), "left")
-          .where(col("tgen").isNull || col("gen") > col("tgen"))
-          .drop("tgen")
-      })
-    }
-  }
+    else Some(graft.store.GenLedger.liveRows(
+      spark.read.parquet(vecPath(dir)), "vec_id", tombMax(spark, dir)))
 
   /** Ids currently dead: tomb'd with no later re-add. Removal-sized. */
   private def deadIds(spark: SparkSession, dir: String): Option[DataFrame] =
@@ -155,7 +124,7 @@ object KnnGraphIndex {
       graft.store.GenLedger.maxGenIn(spark, vecPath(dir)))
 
   private def guardCompaction(spark: SparkSession, dir: String): Unit =
-    graft.store.GenLedger.guardCompaction(spark, dir, Seq("vectors", "graph"))
+    graft.store.GenLedger.guardCompaction(spark, dir, Tables)
 
   /** Add `newVectors` (vec_id, embedding) to the graph, maintaining
     * every affected top-`k` list exactly. Seeding is just an add on an
@@ -256,8 +225,7 @@ object KnnGraphIndex {
       .select(lit(gen).as("gen"), col("vec_id"), col("nid"),
         col("rnk"), col("cos_sim"))
       .write.mode(SaveMode.Append).parquet(graphPath(dir))
-    fsOf(spark, dir).create(
-      new org.apache.hadoop.fs.Path(dir, GcommitPrefix + gen), true).close()
+    graft.store.GenLedger.commit(spark, dir, GcommitPrefix, gen)
     fresh.select(lit(gen).as("gen"), col("vec_id"), col("embedding"), col("sig"))
       .write.mode(SaveMode.Append).parquet(vecPath(dir))
   } // WriterLock released here
@@ -327,13 +295,8 @@ object KnnGraphIndex {
           .select(lit(gen).as("gen"), col("vec_id"), col("nid"),
             col("rnk"), col("cos_sim"))
           .write.mode(SaveMode.Append).parquet(graphPath(dir))
-        val fs = fsOf(spark, dir)
-        fs.create(new org.apache.hadoop.fs.Path(dir, GcommitPrefix + gen),
-          true).close()
-        victims.select(lit(gen).as("gen"), col("vec_id"))
-          .write.mode(SaveMode.Append).parquet(tombsPath(dir))
-        fs.create(new org.apache.hadoop.fs.Path(dir, TcommitPrefix + gen),
-          true).close()
+        graft.store.GenLedger.commit(spark, dir, GcommitPrefix, gen)
+        graft.store.GenLedger.tombstone(spark, dir, victims, gen)
       }
     }
   } // WriterLock released here
@@ -425,20 +388,11 @@ object KnnGraphIndex {
           .join(l.select(col("vec_id").as("nid")), Seq("nid"), "left_anti")
           .count()
     }
-    def tornRows(path: String, prefix: String): Long =
-      if (!exists(spark, path)) 0L
-      else {
-        val committed = committedMarkers(spark, dir, prefix)
-        val t = spark.read.parquet(path)
-        if (committed.isEmpty) t.count()
-        else t.where(!col("gen").isin(committed: _*)).count()
-      }
-    val tornGraph = tornRows(graphPath(dir), GcommitPrefix)
-    val tornTombs = tornRows(tombsPath(dir), TcommitPrefix)
-    val fs = graft.store.GenLedger.fsOf(spark, dir)
-    val staleAsides = Seq("vectors", "graph")
-      .flatMap(t => Seq(s"$dir/$t.old", s"$dir/$t.compacting"))
-      .count(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val tornGraph = graft.store.GenLedger.tornRows(spark, graphPath(dir),
+      committedGens(spark, dir))
+    val tornTombs = graft.store.GenLedger.tornRows(spark, tombsPath(dir),
+      graft.store.GenLedger.committedTombGens(spark, dir))
+    val staleAsides = graft.store.GenLedger.staleAsides(spark, dir, Tables)
     Seq((liveN, dups, dangling, tornGraph, tornTombs, staleAsides))
       .toDF("live_vectors", "dup_live_ids", "dangling_edges",
         "uncommitted_graph_rows", "uncommitted_tombstone_rows",
@@ -450,12 +404,7 @@ object KnnGraphIndex {
     * `dryRun = true` lists only. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame =
-    graft.store.WriterLock.forIndex(spark, dir).withLock {
-      import spark.implicits._
-      graft.store.GenLedger
-        .repairAsides(spark, dir, Seq("vectors", "graph"), dryRun)
-        .toDF("item", "damage", "action", "applied")
-    }
+    graft.store.GenLedger.repairAsides(spark, dir, Tables, dryRun)
 
   /** Graph-descent ANN serve over the STORED graph — the HNSW-shaped
     * alternative to IVF probing (Malkov & Yashunin's search loop on a
@@ -585,27 +534,25 @@ object KnnGraphIndex {
     // committed tombstones force a real compaction pass: the fold is
     // what physically reclaims dead rows (and lets the tombs dir drop)
     val alreadyCompact = gens.size <= 1 &&
-      committedTombGens(spark, dir).isEmpty &&
+      graft.store.GenLedger.committedTombGens(spark, dir).isEmpty &&
       dataFiles(graphPath(dir)) <= numFiles &&
       dataFiles(vecPath(dir)) <= numFiles
     def swap(p: String, compacted: DataFrame): Unit =
       graft.store.GenLedger.swapIn(spark, p, compacted, numFiles)
     if (!alreadyCompact && exists(spark, graphPath(dir))) {
-      val fs = fsOf(spark, dir)
       // commit gen 0 BEFORE the swap: between marker and swap, gen 0
       // simply has no rows; after the swap it carries the fold. The
       // reverse order would give readers a window where the folded rows
       // exist but no marker admits them — an empty graph.
-      fs.create(new org.apache.hadoop.fs.Path(dir, GcommitPrefix + 0L), true)
-        .close()
+      graft.store.GenLedger.commit(spark, dir, GcommitPrefix, 0L)
       swap(graphPath(dir),
         resolve(spark, dir)
           .select(lit(0L).as("gen"), col("vec_id"), col("nid"),
             col("rnk"), col("cos_sim")))
       // retire the folded generations' markers (rows already gone);
       // uncommitted orphan generations died in the swap too
-      committedGens(spark, dir).filter(_ > 0L).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, GcommitPrefix + g), false))
+      graft.store.GenLedger.retireMarkers(spark, dir, GcommitPrefix,
+        committedGens(spark, dir).filter(_ > 0L))
     }
     if (!alreadyCompact && exists(spark, vecPath(dir)))
       // live rows only (dead rows are reclaimed here), each KEEPING its
@@ -619,11 +566,6 @@ object KnnGraphIndex {
     // Tombstones are folded in — drop the rows and their markers.
     // Pure hygiene by this point (see the gen-preservation argument
     // above), so a crash anywhere in this cleanup changes nothing.
-    if (!alreadyCompact) {
-      val fs = fsOf(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(tombsPath(dir)), true)
-      committedTombGens(spark, dir).foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(dir, TcommitPrefix + g), false))
-    }
+    if (!alreadyCompact) graft.store.GenLedger.retireTombs(spark, dir)
   } // WriterLock released here
 }

@@ -50,12 +50,10 @@ object MediaIndex {
   private def bandsPath(dir: String)  = s"$dir/bands"
   private def tombsPath(dir: String)  = s"$dir/tombs"
 
-  private def fsOf(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val Tables = Seq("hashes", "bands", "tombs")
 
   private def exists(spark: SparkSession, p: String): Boolean =
-    fsOf(spark, p).exists(new org.apache.hadoop.fs.Path(p))
+    graft.store.GenLedger.fsOf(spark, p).exists(new org.apache.hadoop.fs.Path(p))
 
   private def readOpt(spark: SparkSession, p: String): Option[DataFrame] =
     if (exists(spark, p)) Some(spark.read.parquet(p)) else None
@@ -77,19 +75,15 @@ object MediaIndex {
       val folded = h.groupBy("asset_id")
         .agg(max(struct(col("gen"), col("hash"))).as("m"))
         .select(col("asset_id"), col("m.gen").as("gen"), col("m.hash").as("hash"))
-      readOpt(spark, tombsPath(dir)) match {
-        case None => folded.select("asset_id", "hash", "gen")
-        case Some(t) =>
-          val tmax = t.groupBy("asset_id").agg(max("gen").as("tgen"))
-          folded.join(tmax, Seq("asset_id"), "left")
-            .where(col("tgen").isNull || col("gen") > col("tgen"))
-            .select("asset_id", "hash", "gen")
-      }
+      // no tombstone markers: every tombstone row counts
+      val tmax = readOpt(spark, tombsPath(dir))
+        .map(_.groupBy("asset_id").agg(max("gen").as("tgen")))
+      graft.store.GenLedger.liveRows(folded, "asset_id", tmax)
+        .select("asset_id", "hash", "gen")
     }
 
   private def guardCompaction(spark: SparkSession, dir: String): Unit =
-    graft.store.GenLedger.guardCompaction(spark, dir,
-      Seq("hashes", "bands", "tombs"))
+    graft.store.GenLedger.guardCompaction(spark, dir, Tables)
 
   /** The doctor family's actuator (the DedupIndex contract): recover or
     * report the interrupted-swap states the GenLedger swaps can leave —
@@ -97,12 +91,7 @@ object MediaIndex {
     * the state [[guardCompaction]] accepts. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame =
-    graft.store.WriterLock.forIndex(spark, dir).withLock {
-      import spark.implicits._
-      graft.store.GenLedger
-        .repairAsides(spark, dir, Seq("hashes", "bands", "tombs"), dryRun)
-        .toDF("item", "damage", "action", "applied")
-    }
+    graft.store.GenLedger.repairAsides(spark, dir, Tables, dryRun)
 
   /** Screen `newHashes` (columns `asset_id`, `hash`) against the index
     * and append the genuinely-new memberships. Emits every near-dup
@@ -193,7 +182,9 @@ object MediaIndex {
   /** Read-only fsck: live counts, duplicate live memberships (crashed
     * appends), orphan band rows (bands whose membership never
     * committed), under-banded live members (a live asset must have its
-    * 8 band rows), dead rows compaction would reclaim. */
+    * 8 band rows), dead rows compaction would reclaim, and
+    * `stale_asides` — `.old` / `.compacting` leftovers of the three
+    * tables' swaps (what [[repair]] fixes; `.old` blocks writes). */
   def doctor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val h = readOpt(spark, hashesPath(dir))
@@ -225,9 +216,11 @@ object MediaIndex {
       case (None, Some(ll)) => ll.count()
       case _ => 0L
     }
-    Seq((nRows, nLive, nRows - nLive, dupLive, orphanBands, underBanded))
+    val staleAsides = graft.store.GenLedger.staleAsides(spark, dir, Tables)
+    Seq((nRows, nLive, nRows - nLive, dupLive, orphanBands, underBanded,
+      staleAsides))
       .toDF("n_rows", "n_live", "dead_rows", "dup_live_memberships",
-        "orphan_bands", "under_banded_live")
+        "orphan_bands", "under_banded_live", "stale_asides")
   }
 
   /** Reclaim dead state: live fingerprints re-stamped at one fresh
@@ -249,9 +242,7 @@ object MediaIndex {
           HammingLsh.bandRows(frozen.select("asset_id", "hash"))
             .select("band", "byte", "asset_id", "hash"),
           numFiles)
-        val fs = fsOf(spark, dir)
-        fs.delete(new org.apache.hadoop.fs.Path(tombsPath(dir)), true)
-        ()
+        graft.store.GenLedger.retireTombs(spark, dir)
     }
   }
 }

@@ -57,48 +57,26 @@ object TextIndex {
   private def docsPath(dir: String) = s"$dir/docs"
   private def tombsPath(dir: String) = s"$dir/tombs"
 
-  private val TcommitPrefix = "_tcommit_"
+  private val Tables = Seq("postings", "docs")
 
   private def nextGen(spark: SparkSession, dir: String): Long =
     graft.store.GenLedger.nextGen(spark, dir,
       graft.store.GenLedger.maxGenIn(spark, docsPath(dir)))
 
-  private def committedTombGens(spark: SparkSession, dir: String): Seq[Long] =
-    graft.store.GenLedger.committedMarkers(spark, dir, TcommitPrefix)
-
   private def exists(spark: SparkSession, p: String): Boolean =
     graft.store.GenLedger.hasData(spark, p)
 
   private def guardCompaction(spark: SparkSession, dir: String): Unit =
-    graft.store.GenLedger.guardCompaction(spark, dir, Seq("postings", "docs"))
-
-  /** Per-id max COMMITTED tombstone generation (absent → no filter in
-    * the plan at all — the common state). Removal-sized: broadcast. */
-  private def tombMax(spark: SparkSession, dir: String): Option[DataFrame] = {
-    if (!exists(spark, tombsPath(dir))) None
-    else {
-      val committed = committedTombGens(spark, dir)
-      if (committed.isEmpty) None
-      else Some(spark.read.parquet(tombsPath(dir))
-        .where(col("gen").isin(committed: _*))
-        .groupBy("doc_id").agg(max("gen").as("tgen")))
-    }
-  }
+    graft.store.GenLedger.guardCompaction(spark, dir, Tables)
 
   /** Live ledger rows (doc_id, dl, gen): a row is live iff no committed
     * tombstone at a later-or-equal generation covers its doc_id. */
-  private def liveDocRows(spark: SparkSession, dir: String): Option[DataFrame] = {
+  private def liveDocRows(spark: SparkSession, dir: String): Option[DataFrame] =
     if (!exists(spark, docsPath(dir))) None
-    else {
-      val docs = spark.read.parquet(docsPath(dir))
-      Some(tombMax(spark, dir) match {
-        case None => docs
-        case Some(t) => docs.join(broadcast(t), Seq("doc_id"), "left")
-          .where(col("tgen").isNull || col("gen") > col("tgen"))
-          .drop("tgen")
-      })
-    }
-  }
+    else Some(graft.store.GenLedger.liveRows(
+      spark.read.parquet(docsPath(dir)), "doc_id",
+      graft.store.GenLedger.committedTombMax(spark, tombsPath(dir),
+        graft.store.GenLedger.committedTombGens(spark, dir), "doc_id")))
 
   /** The ONE tokenization rule, shared with the batch BM25 pass
     * (t7/t8's `split(lower(text), ' ')`): tf is a pure function of the
@@ -132,12 +110,7 @@ object TextIndex {
     * read rule, not corruption. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame =
-    graft.store.WriterLock.forIndex(spark, dir).withLock {
-      import spark.implicits._
-      graft.store.GenLedger
-        .repairAsides(spark, dir, Seq("docs", "postings"), dryRun)
-        .toDF("item", "damage", "action", "applied")
-    }
+    graft.store.GenLedger.repairAsides(spark, dir, Tables, dryRun)
 
   /** Index `newDocs` (doc_id, text, …): tokenize once, append term
     * postings, then commit membership by appending the doc-length
@@ -191,10 +164,7 @@ object TextIndex {
         .join(ids.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
       if (!victims.isEmpty) {
-        val gen = nextGen(spark, dir)
-        victims.select(lit(gen).as("gen"), col("doc_id"))
-          .write.mode(SaveMode.Append).parquet(tombsPath(dir))
-        graft.store.GenLedger.commit(spark, dir, TcommitPrefix, gen)
+        graft.store.GenLedger.tombstone(spark, dir, victims, nextGen(spark, dir))
       }
     }
   } // WriterLock released here
@@ -313,18 +283,9 @@ object TextIndex {
           .where(col("__lgen").isNull || !genMatches)
           .count()
     }
-    val tornTombs =
-      if (!exists(spark, tombsPath(dir))) 0L
-      else {
-        val committed = committedTombGens(spark, dir)
-        val t = spark.read.parquet(tombsPath(dir))
-        if (committed.isEmpty) t.count()
-        else t.where(!col("gen").isin(committed: _*)).count()
-      }
-    val fs = graft.store.GenLedger.fsOf(spark, dir)
-    val staleAsides = Seq("postings", "docs")
-      .flatMap(t => Seq(s"$dir/$t.old", s"$dir/$t.compacting"))
-      .count(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val tornTombs = graft.store.GenLedger.tornRows(spark, tombsPath(dir),
+      graft.store.GenLedger.committedTombGens(spark, dir))
+    val staleAsides = graft.store.GenLedger.staleAsides(spark, dir, Tables)
     Seq((liveN, dups, reclaimable, tornTombs, staleAsides))
       .toDF("live_docs", "dup_live_memberships", "reclaimable_postings",
         "uncommitted_tombstone_rows", "stale_asides")
@@ -346,7 +307,7 @@ object TextIndex {
       numFiles: Int = 8): Map[String, (Int, Int)] =
       graft.store.WriterLock.forIndex(spark, dir).withLock {
     guardCompaction(spark, dir)
-    val hasTombs = committedTombGens(spark, dir).nonEmpty
+    val hasTombs = graft.store.GenLedger.committedTombGens(spark, dir).nonEmpty
     val nDocs = graft.store.GenLedger.dataFileCount(spark, docsPath(dir))
     val nPost = graft.store.GenLedger.dataFileCount(spark, postingsPath(dir))
     // joint no-op guard: a pass that rewrote only one table would leave
@@ -383,12 +344,7 @@ object TextIndex {
             .select(col("tok"), col("doc_id"), col("tf"),
               lit(foldGen).as("gen")),
           numFiles)))
-    if (hasTombs) {
-      val fs = graft.store.GenLedger.fsOf(spark, dir)
-      fs.delete(new org.apache.hadoop.fs.Path(tombsPath(dir)), true)
-      graft.store.GenLedger.retireMarkers(spark, dir, TcommitPrefix,
-        committedTombGens(spark, dir))
-    }
+    if (hasTombs) graft.store.GenLedger.retireTombs(spark, dir)
     out
   } // WriterLock released here
 }

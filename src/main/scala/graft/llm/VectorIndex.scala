@@ -12,10 +12,9 @@ import graft.queries.KMeans
   * per batch — the standard IVF posture; retrain is a scheduled
   * REBUILD), search by probing the nprobe nearest cells.
   *
-  * Storage is VERSIONED (the event store's zero-byte commit-marker
-  * scheme): each build writes a complete `vNNNNNNNN/{centroids,
-  * vectors}` directory and then creates its `_commit_` marker — readers
-  * resolve the highest marker, so a rebuild is atomic: centroids and
+  * Storage is a [[graft.store.VersionedDir]] (layout and crash contract
+  * documented there): each build writes a complete `vNNNNNNNN/{centroids,
+  * vectors}` version, so a rebuild is atomic — centroids and
   * assignments flip TOGETHER or not at all (a two-table overwrite-in-
   * place would have a window of new centroids over old assignments —
   * silently wrong probes, no error). `add` appends into the LIVE
@@ -46,25 +45,16 @@ import graft.queries.KMeans
   */
 object VectorIndex {
 
-  private val CommitPrefix = "_commit_"
   private val KeepVersions = 2
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def versioned(spark: SparkSession, dir: String) =
+    new graft.store.VersionedDir(spark, dir)
 
-  private def currentVersion(spark: SparkSession, dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(CommitPrefix))
-      .sorted.lastOption.map(_.stripPrefix(CommitPrefix))
-  }
-
-  private[llm] def live(spark: SparkSession, dir: String): String =
-    currentVersion(spark, dir).map(v => s"$dir/$v")
+  private[llm] def live(spark: SparkSession, dir: String): String = {
+    val vd = versioned(spark, dir)
+    vd.current.map(vd.pathOf)
       .getOrElse(sys.error(s"no committed index at $dir — run build() first"))
+  }
 
   /** Fused cosine via the native expression (same kernel as v1/v5). */
   private def cosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -121,37 +111,22 @@ object VectorIndex {
     * scanning the corpus. */
   private def commitVersion(spark: SparkSession, dir: String,
       centroids: Array[Array[Double]], rows: DataFrame): Unit = {
-    val fs = fsOf(spark, dir)
-    val curNum = currentVersion(spark, dir)
-      .map(_.drop(1).toInt).getOrElse(0)
-    val next = f"v${curNum + 1}%08d"
     import spark.implicits._
-    centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-      .toDF("cent_id", "centroid")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/$next/centroids")
-    rows
-      .write.partitionBy("cell")
-      .mode(SaveMode.Overwrite).parquet(s"$dir/$next/vectors")
-    // the commit point: readers see the new version exactly here
-    fs.create(new org.apache.hadoop.fs.Path(dir, CommitPrefix + next), true).close()
-    // reap versions beyond the retention window (in-flight readers)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith(CommitPrefix))
-      .sorted.dropRight(KeepVersions)
-      .foreach { m =>
-        val v = m.stripPrefix(CommitPrefix)
-        fs.delete(new org.apache.hadoop.fs.Path(dir, m), false)
-        fs.delete(new org.apache.hadoop.fs.Path(dir, v), true)
-      }
+    versioned(spark, dir).writeNext(KeepVersions) { p =>
+      centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
+        .toDF("cent_id", "centroid")
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$p/centroids")
+      rows
+        .write.partitionBy("cell")
+        .mode(SaveMode.Overwrite).parquet(s"$p/vectors")
+    }
   }
 
   private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
     spark.read.parquet(s"${live(spark, dir)}/centroids")
       .orderBy("cent_id").collect()
       .map(_.getSeq[Double](1).toArray)
-
-  private val TcommitPrefix = "_tcommit_"
 
   /** The version's vector rows with the legacy-schema upgrade: files
     * written before rows carried `gen` read as generation 0 (strictly
@@ -164,21 +139,10 @@ object VectorIndex {
 
   /** Live rows of the version: newer than every committed tombstone for
     * their vec_id. The tombstone side is removal-sized → broadcast. */
-  private[llm] def liveVectors(spark: SparkSession, verDir: String): DataFrame = {
-    val v = readVectors(spark, verDir)
-    val committed = graft.store.GenLedger.committedMarkers(
-      spark, verDir, TcommitPrefix)
-    if (committed.isEmpty ||
-        !graft.store.GenLedger.hasData(spark, s"$verDir/tombs")) v
-    else {
-      val t = spark.read.parquet(s"$verDir/tombs")
-        .where(col("gen").isin(committed: _*))
-        .groupBy("vec_id").agg(max("gen").as("tgen"))
-      v.join(broadcast(t), Seq("vec_id"), "left")
-        .where(col("tgen").isNull || col("gen") > col("tgen"))
-        .drop("tgen")
-    }
-  }
+  private[llm] def liveVectors(spark: SparkSession, verDir: String): DataFrame =
+    graft.store.GenLedger.liveRows(readVectors(spark, verDir), "vec_id",
+      graft.store.GenLedger.committedTombMax(spark, s"$verDir/tombs",
+        graft.store.GenLedger.committedTombGens(spark, verDir), "vec_id"))
 
   /** Append new vectors to the LIVE version, assigned to its centroids
     * map-side. Vec_ids with a LIVE row are dropped (anti-join against
@@ -215,7 +179,7 @@ object VectorIndex {
     * modern layout. */
   private def isCellPartitioned(spark: SparkSession, verDir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$verDir/vectors")
-    val fs = fsOf(spark, verDir)
+    val fs = graft.store.GenLedger.fsOf(spark, verDir)
     !fs.exists(p) || !fs.listStatus(p).exists(st =>
       st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
@@ -233,10 +197,8 @@ object VectorIndex {
       .join(ids.select("vec_id").distinct(), Seq("vec_id"), "left_semi")
       .localCheckpoint(true)
     if (!victims.isEmpty) {
-      val gen = graft.store.GenLedger.nextGen(spark, verDir)
-      victims.select(lit(gen).as("gen"), col("vec_id"))
-        .write.mode(SaveMode.Append).parquet(s"$verDir/tombs")
-      graft.store.GenLedger.commit(spark, verDir, TcommitPrefix, gen)
+      graft.store.GenLedger.tombstone(spark, verDir, victims,
+        graft.store.GenLedger.nextGen(spark, verDir))
     }
   } // WriterLock released here
 
@@ -260,24 +222,16 @@ object VectorIndex {
     *    delete. */
   def doctor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fs = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val names =
-      if (!fs.exists(p)) Seq.empty[String]
-      else fs.listStatus(p).map(_.getPath.getName).toSeq
-    val uncommitted = names.count(n =>
-      n.matches("v\\d{8}") && !names.contains(CommitPrefix + n))
-    // the read-breaking class: resolution lands on the HIGHEST marker,
-    // so a dangling highest marker fails every read of the index
-    val dangling = names.filter(_.startsWith(CommitPrefix))
-      .map(_.stripPrefix(CommitPrefix)).count(v => !names.contains(v))
-    val report = currentVersion(spark, dir) match {
+    val s = versioned(spark, dir).structure
+    val uncommitted = s.uncommitted.size
+    val report = s.live match {
       case None => (0L, 0L, 0L, 0L, uncommitted)
-      // a dangling HIGHEST marker: the live-state audit cannot run (the
-      // dir the resolution points at is gone) — report the structural
-      // counts; repair() deletes the marker, after which reads and the
-      // full audit resolve to the previous committed version
-      case Some(v) if !names.contains(v) =>
+      // a dangling HIGHEST marker — the read-breaking class: the
+      // live-state audit cannot run (the dir the resolution points at is
+      // gone) — report the structural counts; repair() deletes the
+      // marker, after which reads and the full audit resolve to the
+      // previous committed version
+      case Some(v) if s.dangling.contains(v) =>
         (0L, 0L, 0L, 0L, uncommitted)
       case Some(v) =>
         val verDir = s"$dir/$v"
@@ -288,18 +242,12 @@ object VectorIndex {
         val cs = loadCentroids(spark, dir)
         val mis = lv.where(col("cell") =!=
           KMeans.assignCell(cs, col("embedding"))).count()
-        val torn =
-          if (!graft.store.GenLedger.hasData(spark, s"$verDir/tombs")) 0L
-          else {
-            val cg = graft.store.GenLedger.committedMarkers(
-              spark, verDir, TcommitPrefix)
-            val t = spark.read.parquet(s"$verDir/tombs")
-            if (cg.isEmpty) t.count()
-            else t.where(!col("gen").isin(cg: _*)).count()
-          }
+        val torn = graft.store.GenLedger.tornRows(spark, s"$verDir/tombs",
+          graft.store.GenLedger.committedTombGens(spark, verDir))
         (liveN, dups, mis, torn, uncommitted)
     }
-    Seq((report._1, report._2, report._3, report._4, report._5, dangling))
+    Seq((report._1, report._2, report._3, report._4, report._5,
+      s.dangling.size))
       .toDF("live_vectors", "dup_live_ids", "misassigned_cells",
         "uncommitted_tombstone_rows", "uncommitted_versions",
         "dangling_markers")
@@ -308,15 +256,14 @@ object VectorIndex {
   /** Guarded repair for the versioned layout's two structural damage
     * classes ([[doctor]]'s `dangling_markers` — the read-breaking one —
     * and `uncommitted_versions`). Rules in
-    * [[graft.store.GenLedger.repairVersions]]; `dryRun = true` lists
-    * only. Misassigned cells / torn tombstones stay with `build()`
-    * retrain — they are data repairs, not structure. */
+    * [[graft.store.VersionedDir.repair]]; `dryRun = true` lists only.
+    * Misassigned cells / torn tombstones stay with `build()` retrain —
+    * they are data repairs, not structure. */
   def repair(spark: SparkSession, dir: String,
       dryRun: Boolean = true): DataFrame =
     graft.store.WriterLock.forIndex(spark, dir).withLock {
       import spark.implicits._
-      graft.store.GenLedger
-        .repairVersions(spark, dir, CommitPrefix, dryRun)
+      versioned(spark, dir).repair(dryRun)
         .toDF("item", "damage", "action", "applied")
     }
 
@@ -324,7 +271,7 @@ object VectorIndex {
     * serve-sync loop diffs against the upstream keeper set (p1b).
     * Empty frame when no version has been committed yet. */
   def liveIds(spark: SparkSession, dir: String): DataFrame =
-    currentVersion(spark, dir) match {
+    versioned(spark, dir).current match {
       case None => spark.range(0).select(col("id").as("vec_id"))
       case Some(v) => liveVectors(spark, s"$dir/$v").select("vec_id")
     }

@@ -2,7 +2,6 @@ package graft.oracle
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,15 +125,12 @@ object EventQueries {
   * envelope (S14, event_data.rs:33-36); the API is Delta-shaped so a
   * transactional table format can slot in unchanged.
   *
-  * Reader isolation: each table is a directory of immutable version
-  * subdirs (`v00000001`, …) plus `_commit_v…` marker files — the
-  * zero-byte analog of a Delta/Iceberg metadata commit. A swap writes
-  * the NEW version dir in full, then creates its marker; readers resolve
-  * the highest marker, so they always land on a fully-written version.
-  * The reference got the same isolation from DuckDB's file lock
-  * (db/event_data.rs:44-101). Retired versions linger for
-  * [[EventStore.KeepVersions]] swaps (covering in-flight scans, like a
-  * VACUUM retention window) before deletion.
+  * Reader isolation: each table is a [[graft.store.VersionedDir]] (see
+  * there for the layout and its crash contract); readers resolve the
+  * highest commit marker, so they always land on a fully-written
+  * version. The reference got the same isolation from DuckDB's file
+  * lock (db/event_data.rs:44-101). Retired versions linger for
+  * [[EventStore.KeepVersions]] swaps before deletion.
   */
 final class EventStore(spark: SparkSession, root: String,
     lockStaleMs: Long = EventStore.LockStaleMs) {
@@ -159,54 +155,21 @@ final class EventStore(spark: SparkSession, root: String,
     * the insert methods' own lock take nests fine. */
   private[graft] def withWriterLock[T](f: => T): T = writerLock.withLock(f)
 
-  private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def versionName(n: Int): String = f"v$n%08d"
-
-  private val CommitPrefix = "_commit_"
-
-  /** The live version = the highest committed marker. The marker's NAME
-    * carries the version (its content is never read), so resolution is
-    * one atomic directory listing — no partially-written pointer file to
-    * race against, on any FileSystem. */
-  private def currentVersion(table: String): Option[String] = {
-    val dir = new Path(path(table))
-    if (!fs.exists(dir)) None
-    else {
-      val names = fs.listStatus(dir).map(_.getPath.getName)
-      val cur = names.filter(_.startsWith(CommitPrefix))
-        .sorted.lastOption.map(_.stripPrefix(CommitPrefix))
-      // A table dir holding bare parquet files but no commit marker is
-      // the pre-versioning flat layout — reading it as "empty" would
-      // silently vanish the data (and restart id sequences on top of
-      // it). Refuse loudly instead.
-      if (cur.isEmpty && names.exists(_.endsWith(".parquet")))
-        sys.error(s"table '$table' at ${path(table)} uses the legacy flat " +
-          "layout; migrate by moving its files into a 'v00000001' subdir " +
-          s"and creating an empty '${CommitPrefix}v00000001' marker")
-      cur
-    }
-  }
-
-  /** Commit `version`: create its marker file. Readers see the new
-    * version exactly when the marker appears. */
-  private def commitPointer(table: String, version: String): Unit =
-    fs.create(new Path(path(table), CommitPrefix + version), true).close()
-
-  private def tableExists(table: String): Boolean = currentVersion(table).isDefined
+  private def versioned(table: String) =
+    new graft.store.VersionedDir(spark, path(table))
 
   private def readOr[T: org.apache.spark.sql.Encoder](table: String): Dataset[T] = {
     // A reader that lags more than KeepVersions swaps behind can resolve
     // a just-deleted version dir; re-resolving the pointer heals it.
+    val vd = versioned(table)
     var attempt = 0
     while (true) {
-      currentVersion(table) match {
+      vd.current match {
         case None => return spark.emptyDataset[T]
         case Some(v) =>
-          try return spark.read.parquet(new Path(path(table), v).toString).as[T]
+          try return spark.read.parquet(vd.pathOf(v)).as[T]
           catch {
-            case _: Throwable if attempt < 3 &&
-                !fs.exists(new Path(path(table), v)) => attempt += 1
+            case _: Throwable if attempt < 3 && !vd.holds(v) => attempt += 1
           }
       }
     }
@@ -217,34 +180,22 @@ final class EventStore(spark: SparkSession, root: String,
     * surface the versioned-swap layout provides for free (the last
     * [[EventStore.KeepVersions]] swaps are retained; older dirs are
     * reaped). A zero-cost analog of Delta/Iceberg snapshot listing. */
-  def tableVersions(table: String): Seq[String] = {
-    val dir = new Path(path(table))
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName).toSeq
-      .filter(_.startsWith(CommitPrefix)).sorted
-      .map(_.stripPrefix(CommitPrefix))
-  }
+  def tableVersions(table: String): Seq[String] = versioned(table).versions
 
   /** Read-only fsck — the doctor-family member for the versioned event
     * store (same posture as the index services' doctors). One row per
     * table: the live version, committed-version count (the time-travel
     * window), `uncommitted_dirs` — version dirs with no `_commit_`
     * marker (a swap that died pre-commit: inert scratch, reaped by the
-    * next retention pass or by hand), and `dangling_markers` — markers
-    * whose version DIR is missing: a REAL violation (resolution lands
-    * on the highest marker, so a dangling highest marker breaks every
-    * read of the table; recover by deleting the marker). */
+    * next write of that version or by [[repair]]), and
+    * `dangling_markers` — markers whose version DIR is missing: a REAL
+    * violation (resolution lands on the highest marker, so a dangling
+    * highest marker breaks every read of the table; recover by deleting
+    * the marker). */
   def doctor(): DataFrame = {
     val rows = EventStore.AllTables.map { t =>
-      val dir = new Path(path(t))
-      val names =
-        if (!fs.exists(dir)) Seq.empty[String]
-        else fs.listStatus(dir).map(_.getPath.getName).toSeq
-      val dirs = names.filter(_.matches("v\\d{8}")).toSet
-      val marks = names.filter(_.startsWith(CommitPrefix))
-        .map(_.stripPrefix(CommitPrefix)).toSet
-      (t, marks.toSeq.sorted.lastOption.getOrElse(""),
-        marks.size, (dirs -- marks).size, (marks -- dirs).size)
+      val s = versioned(t).structure
+      (t, s.live.getOrElse(""), s.committed, s.uncommitted.size, s.dangling.size)
     }
     rows.toDF("table", "live_version", "committed_versions",
       "uncommitted_dirs", "dangling_markers")
@@ -261,9 +212,7 @@ final class EventStore(spark: SparkSession, root: String,
     * (table, item, damage, action, applied). */
   def repair(dryRun: Boolean = true): DataFrame = withWriterLock {
     val rows = EventStore.AllTables.flatMap { t =>
-      graft.store.GenLedger
-        .repairVersions(spark, path(t), CommitPrefix, dryRun)
-        .map { case (item, damage, action, applied) =>
+      versioned(t).repair(dryRun).map { case (item, damage, action, applied) =>
           (t, item, damage, action, applied)
         }
     }
@@ -279,13 +228,13 @@ final class EventStore(spark: SparkSession, root: String,
     * Fails if the version has been reaped (older than KeepVersions
     * swaps) or is the live one. */
   def entriesAsOf(version: String): Dataset[EntryRow] = {
-    require(!currentVersion("events_entries").contains(version),
+    val vd = versioned("events_entries")
+    require(!vd.current.contains(version),
       s"version $version is live (appends mutate it in place) — " +
         "time travel reads retired versions; use `entries` for the current state")
-    val p = new Path(path("events_entries"), version)
-    require(fs.exists(p), s"version $version is not retained " +
+    require(vd.holds(version), s"version $version is not retained " +
       s"(KeepVersions=${EventStore.KeepVersions})")
-    spark.read.parquet(p.toString).as[EntryRow]
+    spark.read.parquet(vd.pathOf(version)).as[EntryRow]
   }
 
   def events: Dataset[EventRow] = readOr[EventRow]("events")
@@ -327,24 +276,8 @@ final class EventStore(spark: SparkSession, root: String,
     * allows (event_db_migrations.rs:44-80). Stores created before this
     * scheme bootstrap the mark from `max(id)` once. Single-writer by
     * store contract, so reserve-then-write needs no lock. */
-  private def reserveSeq(table: String, n: Long, bootstrap: => Long): Long = {
-    val dir = new Path(path(table))
-    val existing =
-      if (!fs.exists(dir)) Seq.empty[String]
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith(SeqPrefix)).toSeq
-    val hwm = existing.map(_.stripPrefix(SeqPrefix).toLong)
-      .maxOption.getOrElse(bootstrap)
-    if (n > 0) {
-      // n == 0 must not touch the marker: the new name would equal the
-      // old one and the retire pass below would delete it, losing the
-      // sequence state
-      fs.create(new Path(dir, SeqPrefix + (hwm + n)), true).close()
-      existing.filterNot(_ == SeqPrefix + (hwm + n))
-        .foreach(m => fs.delete(new Path(dir, m), false))
-    }
-    hwm
-  }
+  private def reserveSeq(table: String, n: Long, bootstrap: => Long): Long =
+    graft.store.GenLedger.reserve(spark, path(table), SeqPrefix, n, bootstrap)
 
   /** F10 + F9 — insert entries whose choices have no ids yet and whose
     * audit timestamps may be unset: choice ids come from the store's
@@ -385,17 +318,15 @@ final class EventStore(spark: SparkSession, root: String,
     EventQueries.signEventsJson(events.toDF(), ids)
 
   /** Append into the live version dir (new files only — nothing a
-    * concurrent reader already listed is touched); first write creates
-    * version 1 and commits the pointer. */
-  private def append(table: String, df: DataFrame): Unit =
-    currentVersion(table) match {
-      case Some(v) =>
-        df.write.mode(SaveMode.Append).parquet(new Path(path(table), v).toString)
-      case None =>
-        val v = versionName(1)
-        df.write.mode(SaveMode.Append).parquet(new Path(path(table), v).toString)
-        commitPointer(table, v)
+    * concurrent reader already listed is touched); the first write
+    * creates and commits version 1. */
+  private def append(table: String, df: DataFrame): Unit = {
+    val vd = versioned(table)
+    vd.current match {
+      case Some(v) => df.write.mode(SaveMode.Append).parquet(vd.pathOf(v))
+      case None => swapWrite(table, df)
     }
+  }
 
   /** J5 — correlated-update equivalent (event_data.rs:405-448):
     * entries.score = scores.score where matched. Read-join-swap. */
@@ -424,28 +355,12 @@ final class EventStore(spark: SparkSession, root: String,
     }
 
   /** Overwrite a table that is also the read source: write the NEXT
-    * version dir in full, commit the pointer atomically, then retire
-    * versions older than the retention window. The read path (old
-    * version) is never touched, so concurrent readers are safe at every
-    * instant of the swap. */
-  private def swapWrite(table: String, df: DataFrame): Unit = {
-    val cur = currentVersion(table)
-    val curNum = cur.map(_.drop(1).toInt).getOrElse(0)
-    val next = versionName(curNum + 1)
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(path(table), next).toString)
-    commitPointer(table, next)
-    // retention: keep the newest KeepVersions versions for in-flight
-    // readers; retire marker-then-dir for the rest
-    val retired = fs.listStatus(new Path(path(table)))
-      .map(_.getPath.getName)
-      .filter(_.startsWith(CommitPrefix))
-      .sorted.dropRight(EventStore.KeepVersions)
-      .map(_.stripPrefix(CommitPrefix))
-    retired.foreach { v =>
-      fs.delete(new Path(path(table), CommitPrefix + v), false)
-      fs.delete(new Path(path(table), v), true)
-    }
-  }
+    * version dir in full and commit it ([[graft.store.VersionedDir
+    * .writeNext]]). The read path (old version) is never touched, so
+    * concurrent readers are safe at every instant of the swap. */
+  private def swapWrite(table: String, df: DataFrame): Unit =
+    versioned(table).writeNext(EventStore.KeepVersions)(p =>
+      df.write.mode(SaveMode.Overwrite).parquet(p))
 
   /** J4 + A4 + P6 — active events (no attestation yet) with entry counts,
     * COALESCE(total_entries, 0) (event_data.rs:700-738). */

@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 /** The generation-ledger machinery shared by the stateful services
   * ([[graft.llm.DedupIndex]], [[graft.llm.KnnGraphIndex]],
   * [[graft.llm.VectorIndex]], [[graft.llm.TextIndex]],
-  * [[graft.llm.CorpusRefresh]]): marker-file generation counter,
-  * commit-marker sets, interrupted-compaction guard, and the atomic
-  * directory swap. One implementation so the crash contracts — which
-  * are load-bearing in every caller — cannot drift apart.
+  * [[graft.llm.MediaIndex]], [[graft.llm.CorpusRefresh]]): marker-file
+  * generation counter, commit-marker sets, the tombstone-liveness rule,
+  * interrupted-compaction guard, the atomic directory swap, and the
+  * structural checks of their doctors and repairs (torn rows, stale
+  * asides). One implementation so the crash contracts — which are
+  * load-bearing in every caller — cannot drift apart. The versioned
+  * layouts live in [[VersionedDir]].
   *
   * The conventions, shared verbatim by every caller:
   *  - `_gen_<n>` — the generation high-water mark lives in a marker
@@ -33,6 +36,10 @@ import org.apache.spark.sql.functions._
 object GenLedger {
 
   val GenPrefix = "_gen_"
+
+  /** Commit-marker prefix of tombstone appends (`tombs/` under the
+    * ledger dir) — shared by every service that tombstones. */
+  val TcommitPrefix = "_tcommit_"
 
   def fsOf(spark: SparkSession, p: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(p)
@@ -79,19 +86,26 @@ object GenLedger {
     * [[maxGenIn]] scan for state dirs that predate the marker), create
     * the new marker, retire stale ones. */
   def nextGen(spark: SparkSession, dir: String,
-      hwmFallback: => Long = 0L): Long = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(d)) fs.mkdirs(d)
-    val existing = fs.listStatus(d).map(_.getPath.getName)
-      .filter(_.startsWith(GenPrefix)).toSeq
-    val hwm = existing.map(_.stripPrefix(GenPrefix).toLong).maxOption
+      hwmFallback: => Long = 0L): Long =
+    reserve(spark, dir, GenPrefix, 1L, hwmFallback) + 1
+
+  /** Reserve `n` values of the counter whose high-water mark lives in the
+    * NAME of a `<prefix><hwm>` marker under `dir`: returns the old mark
+    * (`hwmFallback` when no marker exists yet); the caller owns
+    * `hwm+1 … hwm+n`. One listing plus one create, O(1) in state size.
+    * `n == 0` touches nothing — the new name would equal the old one and
+    * the retire pass would delete it, losing the counter. */
+  def reserve(spark: SparkSession, dir: String, prefix: String, n: Long,
+      hwmFallback: => Long): Long = {
+    val existing = markerNames(spark, dir, prefix)
+    val hwm = existing.map(_.stripPrefix(prefix).toLong).maxOption
       .getOrElse(hwmFallback)
-    val gen = hwm + 1
-    fs.create(new org.apache.hadoop.fs.Path(d, GenPrefix + gen), true).close()
-    existing.foreach(m =>
-      fs.delete(new org.apache.hadoop.fs.Path(d, m), false))
-    gen
+    if (n > 0) {
+      commit(spark, dir, prefix, hwm + n)
+      retireMarkers(spark, dir, prefix,
+        existing.map(_.stripPrefix(prefix).toLong))
+    }
+    hwm
   }
 
   /** Raw marker file names under `dir` starting with `prefix`. For
@@ -113,9 +127,11 @@ object GenLedger {
 
   /** Create `<prefix><gen>` — the append's commit point. */
   def commit(spark: SparkSession, dir: String, prefix: String,
-      gen: Long): Unit =
-    fsOf(spark, dir).create(
-      new org.apache.hadoop.fs.Path(dir, prefix + gen), true).close()
+      gen: Long): Unit = touch(spark, dir, prefix + gen)
+
+  /** Create the empty marker file `dir/<name>` (idempotent). */
+  def touch(spark: SparkSession, dir: String, name: String): Unit =
+    fsOf(spark, dir).create(new org.apache.hadoop.fs.Path(dir, name), true).close()
 
   /** Retire the given markers (rows already folded/gone). */
   def retireMarkers(spark: SparkSession, dir: String, prefix: String,
@@ -153,12 +169,14 @@ object GenLedger {
     *    an aborted aside write; droppable scratch.
     * Anything else (torn gen rows, dead postings) is NOT repaired here:
     * those are invisible-by-read-rule and physically reclaimed by the
-    * service's own `compact`. Caller MUST hold the service's
-    * WriterLock — repair races a concurrent swap otherwise. With
+    * service's own `compact`. Runs under the service's index
+    * [[WriterLock]] — repair races a concurrent swap otherwise. With
     * `dryRun` (the default posture) every action is listed, nothing is
-    * touched. Returns (item, damage, action, applied) rows. */
+    * touched. Returns the (item, damage, action, applied) frame every
+    * service's `repair` serves. */
   def repairAsides(spark: SparkSession, dir: String, tables: Seq[String],
-      dryRun: Boolean): Seq[(String, String, String, Boolean)] = {
+      dryRun: Boolean): DataFrame = WriterLock.forIndex(spark, dir).withLock {
+    import spark.implicits._
     val fs = fsOf(spark, dir)
     tables.flatMap { t =>
       val live = new org.apache.hadoop.fs.Path(s"$dir/$t")
@@ -180,43 +198,78 @@ object GenLedger {
           Some((t, "aborted_aside_write", s"delete $comp", applied))
         }
       oldAction.toSeq ++ compAction
-    }
+    }.toDF("item", "damage", "action", "applied")
   }
 
-  /** [[repairAsides]]' counterpart for VERSIONED layouts (the
-    * EventStore / VectorIndex `vNNNNNNNN` + `_commit_` pattern). Two
-    * damage classes, both exactly what the layouts' doctors report:
-    *  - a DANGLING MARKER (marker, no dir) — the read-breaking one:
-    *    resolution lands on the highest marker, so a dangling highest
-    *    marker fails every read; the marker is the corrupt artifact
-    *    (its data never survived), delete it and reads resolve to the
-    *    previous committed version;
-    *  - an UNCOMMITTED DIR (dir, no marker) — a build/swap that died
-    *    pre-flip: inert scratch, delete the dir.
-    * Same contract as [[repairAsides]]: hold the service's WriterLock,
-    * dryRun lists without touching. */
-  def repairVersions(spark: SparkSession, parent: String,
-      commitPrefix: String, dryRun: Boolean): Seq[(String, String, String, Boolean)] = {
-    val p = new org.apache.hadoop.fs.Path(parent)
-    val fs = fsOf(spark, parent)
-    if (!fs.exists(p)) Seq.empty
+  /** `.old` / `.compacting` leftovers of `tables` under `dir` — what
+    * doctors report as `stale_asides` and [[repairAsides]] acts on. */
+  def staleAsides(spark: SparkSession, dir: String, tables: Seq[String]): Int = {
+    val fs = fsOf(spark, dir)
+    tables.flatMap(t => Seq(s"$dir/$t.old", s"$dir/$t.compacting"))
+      .count(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+  }
+
+  /** Rows of the `gen`-stamped table at `path` whose generation is not
+    * in `committed` (appends that died before their marker): invisible
+    * to reads, counted by doctors. 0 when the table has no data. */
+  def tornRows(spark: SparkSession, path: String,
+      committed: => Seq[Long]): Long =
+    if (!hasData(spark, path)) 0L
     else {
-      val names = fs.listStatus(p).map(_.getPath.getName).toSeq
-      val dirs = names.filter(_.matches("v\\d{8}")).toSet
-      val marks = names.filter(_.startsWith(commitPrefix))
-        .map(_.stripPrefix(commitPrefix)).toSet
-      val dangling = (marks -- dirs).toSeq.sorted.map { v =>
-        val m = new org.apache.hadoop.fs.Path(parent, commitPrefix + v)
-        val applied = !dryRun && fs.delete(m, false)
-        (v, "dangling_marker", s"delete $m", applied)
-      }
-      val dead = (dirs -- marks).toSeq.sorted.map { v =>
-        val d = new org.apache.hadoop.fs.Path(parent, v)
-        val applied = !dryRun && fs.delete(d, true)
-        (v, "uncommitted_dir", s"delete $d", applied)
-      }
-      dangling ++ dead
+      val gens = committed
+      val t = spark.read.parquet(path)
+      if (gens.isEmpty) t.count()
+      else t.where(!col("gen").isin(gens: _*)).count()
     }
+
+  /** Per-`key` max COMMITTED tombstone generation (`tgen`) of the
+    * tombstone table at `tombs` — None when it has no data or nothing
+    * is committed (the common state, so [[liveRows]] leaves no filter in
+    * the plan at all). */
+  def committedTombMax(spark: SparkSession, tombs: String,
+      committed: => Seq[Long], key: String): Option[DataFrame] =
+    if (!hasData(spark, tombs)) None
+    else {
+      val gens = committed
+      if (gens.isEmpty) None
+      else Some(spark.read.parquet(tombs)
+        .where(col("gen").isin(gens: _*))
+        .groupBy(key).agg(max("gen").as("tgen")))
+    }
+
+  /** The tombstone-liveness rule: a row is live iff no tombstone at an
+    * equal-or-later generation covers its `key` — so a removed id is
+    * dead and a removed-then-re-added id is live through exactly its
+    * re-add row. Tombstones are removal-sized: always broadcast. */
+  def liveRows(rows: DataFrame, key: String,
+      tombMax: Option[DataFrame]): DataFrame =
+    tombMax.fold(rows)(t => rows.join(broadcast(t), Seq(key), "left")
+      .where(col("tgen").isNull || col("gen") > col("tgen"))
+      .drop("tgen"))
+
+  /** Tombstone generations under `dir` whose append COMPLETED (their
+    * `_tcommit_<n>` marker exists): a torn tombstone append — files
+    * visible, writer lost before the marker — is invisible to every
+    * reader, so a crash can never half-remove anything. */
+  def committedTombGens(spark: SparkSession, dir: String): Seq[Long] =
+    committedMarkers(spark, dir, TcommitPrefix)
+
+  /** Append `ids` (one key column) as tombstones at `gen` under
+    * `dir/tombs`, then create `_tcommit_<gen>` — the removal's commit
+    * point: a torn append without its marker is invisible. */
+  def tombstone(spark: SparkSession, dir: String, ids: DataFrame,
+      gen: Long): Unit = {
+    ids.select(lit(gen).as("gen") +: ids.columns.toSeq.map(col): _*)
+      .write.mode("append").parquet(s"$dir/tombs")
+    commit(spark, dir, TcommitPrefix, gen)
+  }
+
+  /** Drop the folded-in tombstones: the `tombs` table under `dir` and
+    * every `_tcommit_` marker. Only valid once compaction has rewritten
+    * the rows they covered. */
+  def retireTombs(spark: SparkSession, dir: String): Unit = {
+    fsOf(spark, dir).delete(new org.apache.hadoop.fs.Path(s"$dir/tombs"), true)
+    retireMarkers(spark, dir, TcommitPrefix, committedTombGens(spark, dir))
   }
 
   /** The atomic swap: write `content` to `<p>.compacting`, rename `p`

@@ -107,4 +107,33 @@ class BqSidecarSpec extends AnyFunSuite {
       v == danglingV && damage == "dangling_marker" && ok })
     assert(servedIds(dir) == before)
   }
+
+  test("a torn refresh does not block the next refresh; serve answers from the new version") {
+    val dir = new java.io.File(
+      java.nio.file.Files.createTempDirectory("bq_sidecar_torn").toFile,
+      "idx").getAbsolutePath
+    VectorIndex.build(spark, dir, embDF(0L to 9L), k = 2)
+    BqSidecar.refresh(spark, dir)
+
+    // the same torn state as the atomic test: a full copy of the
+    // committed version at the next name, with no commit marker
+    val bq = new java.io.File(dir, "bq")
+    def committed(): String = bq.listFiles.map(_.getName)
+      .filter(_.startsWith("_commit_")).max.stripPrefix("_commit_")
+    val live = committed()
+    val torn = f"v${live.drop(1).toInt + 1}%08d"
+    val src = new java.io.File(bq, live).toPath
+    val dst = new java.io.File(bq, torn).toPath
+    java.nio.file.Files.walk(src).forEach { p =>
+      val t = dst.resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    }
+
+    // no repair: the next refresh claims the torn name and commits it
+    VectorIndex.add(spark, dir, embDF(Seq(100L)))
+    BqSidecar.refresh(spark, dir)
+    assert(committed() == torn)
+    assert(servedIds(dir) == (1L to 9L).toSet + 100L)
+  }
 }

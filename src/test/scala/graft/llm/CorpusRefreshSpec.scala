@@ -318,4 +318,21 @@ class CorpusRefreshSpec extends AnyFunSuite {
     assert((h2, c2) == ((h1, c1)), "compact must not change resolved state")
     assert((u2, m2, s2, d2) == ((0L, 0L, 0, 0L)), "post-compact audit must be clean")
   }
+
+  test("preparedMeta is prepared's metadata projection after refreshes and a takedown") {
+    val dir = Files.createTempDirectory("graft-refresh-meta").toString
+    val docs = Tables.documents(spark, sf)
+    def meta(df: DataFrame): Seq[Seq[Any]] =
+      df.select("doc_id", "lang", "n_tokens", "n_copies", "cluster_size")
+        .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    def check(): Unit = assert(meta(CorpusRefresh.preparedMeta(spark, dir)) ==
+      meta(CorpusRefresh.prepared(spark, dir)))
+    check() // empty state
+    CorpusRefresh.refresh(spark, dir, docs.where(col("doc_id") % 2 === 1))
+    CorpusRefresh.refresh(spark, dir, docs.where(col("doc_id") % 2 === 0))
+    check()
+    CorpusRefresh.remove(spark, dir, docs.where(col("doc_id") % 7 === 3).select("doc_id"))
+    assert(meta(CorpusRefresh.preparedMeta(spark, dir)).nonEmpty)
+    check()
+  }
 }

@@ -151,4 +151,19 @@ class MediaIndexSpec extends AnyFunSuite {
     assert(p.isEmpty) // doc 1 has no partner among {1,2}
     assert(MediaIndex.doctor(spark, dir).head().getAs[Long]("n_live") == 2L)
   }
+
+  test("doctor reports stale asides; repair clears exactly what it reports") {
+    val dir = freshDir()
+    MediaIndex.checkAndAdd(spark, dir, hashesFor(Seq(1L -> 0, 2L -> 0)))
+    assert(MediaIndex.doctor(spark, dir).head().getAs[Int]("stale_asides") == 0)
+    // a completed swap's leftover and an aborted aside write
+    assert(new java.io.File(s"$dir/hashes.old").mkdirs())
+    assert(new java.io.File(s"$dir/bands.compacting").mkdirs())
+    assert(MediaIndex.doctor(spark, dir).head().getAs[Int]("stale_asides") == 2)
+    val fixed = MediaIndex.repair(spark, dir, dryRun = false).collect()
+    assert(fixed.length == 2 && fixed.forall(_.getBoolean(3)))
+    val d = MediaIndex.doctor(spark, dir).head()
+    assert(d.getAs[Int]("stale_asides") == 0)
+    assert(d.getAs[Long]("n_live") == 2L)
+  }
 }

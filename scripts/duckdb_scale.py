@@ -7,7 +7,7 @@ instead of hanging the sweep — the recursive-CTE oracles are expected
 to blow up superlinearly on the graph family.
 
 Usage: python3 scripts/duckdb_scale.py <datadir> <q1,q2,...> [timeout_s]
-Note: documents.parquet in a ScaleProbe replica dir is a DIRECTORY of
+Note: documents.parquet in a ScaleBuild replica dir is a DIRECTORY of
 parquet parts; duckdb needs the glob form for those.
 """
 import json, os, signal, sys, time

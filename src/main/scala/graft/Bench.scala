@@ -25,8 +25,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, "graft-bench")
+    val spark = Sessions.local(Sessions.cores.toString, "graft-bench")
 
     def runOnce(name: String): Double = {
       spark.catalog.clearCache()
@@ -87,8 +86,9 @@ object Bench {
       * hand-adjudicated the same ambient-interference fingerprint —
       * diffuse sub-second inflation across untouched queries. Automate
       * the triage: a fixed data-independent CPU probe (pure codegen'd
-      * arithmetic over range(), 32 threads, warm + min-of-3 — the same
-      * protocol as the queries), recorded in the artifact as
+      * arithmetic over range(), all session cores — 32 when the reference
+      * below was pinned — warm + min-of-3, the same protocol as the
+      * queries), recorded in the artifact as
       * `host_probe_sec` / `host_factor`. (The engines' probes differ
       * in row count only because their per-row cost differs ~10×; each
       * carries its own pinned reference.) The reference constant is the

@@ -41,7 +41,9 @@ import graft.store.WeatherStore
   *                                      0 = API only, no daemon)
   *   --refill-rate=15 --token-capacity=3  rate limiter (utils.rs:44-51)
   *   --user-agent=noaa-data-pipeline/1.0
-  *   --cores=8                          local session parallelism
+  *   --cores=N                          local session parallelism
+  *                                      (default: SPARK_GRAFT_CPUS, else
+  *                                      the host's processors)
   * }}}
   *
   * Defaults point at the same public upstreams the reference uses
@@ -68,7 +70,7 @@ object Main {
       refillRateSeconds: Double = 15.0,
       tokenCapacity: Int = 3,
       userAgent: String = "noaa-data-pipeline/1.0",
-      cores: Int = 8)
+      cores: Int = Sessions.cores)
 
   def parse(args: Array[String]): Config =
     args.foldLeft(Config()) { (c, arg) =>

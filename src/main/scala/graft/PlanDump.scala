@@ -10,7 +10,7 @@ object PlanDump {
     // the engine-configured session: events' footer-driven ts decoding and
     // the custom optimizer rules must be on, or the dumped plan isn't the
     // plan the engine runs (and events-reading queries fail outright)
-    val spark = Sessions.local("8", "graft-plan-dump")
+    val spark = Sessions.local(Sessions.cores.toString, "graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

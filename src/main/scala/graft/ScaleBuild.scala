@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * - region/nation: copied as-is (fixed dimensions; TPC-H does not
   *   scale them, and nationkey references must stay in range)
   * - documents: doc_id offset + per-replica consonant rotation of text
-  *   (same scheme as [[ScaleProbe]]) — corpus grows without
+  *   (replicas are textually unrelated) — corpus grows without
   *   manufacturing near-dup clusters; rotation count caps the multiplier
   * - embeddings: vec_id offset + dimension rotation by k (norm- and
   *   distance-structure-preserving, so ANN work grows with corpus size
@@ -36,7 +36,7 @@ object ScaleBuild {
     val m = args.headOption.getOrElse("10").toInt
     val base = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else s"/tmp/graft-scale/full${m}x"
-    val spark = Sessions.local("32", "graft-scale-build")
+    val spark = Sessions.local(Sessions.cores.toString, "graft-scale-build")
 
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -97,7 +97,7 @@ object ScaleBuild {
     write(replicate(events,
       Seq("event_id" -> nEv, "user_id" -> nUser)), "events", 8)
 
-    // documents: consonant rotation, capped like ScaleProbe
+    // documents: consonant rotation, capped at one rotation per consonant
     val abc = "bcdfghjklmnpqrstvwz"
     require(m <= abc.length,
       s"multiplier $m exceeds ${abc.length} distinct rotations")

@@ -38,7 +38,7 @@ object ScaleInvariantProbe {
 
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/tmp/graft-scale/full10x")
-    val spark = Sessions.local("32", "graft-scale-invariants")
+    val spark = Sessions.local(Sessions.cores.toString, "graft-scale-invariants")
     import spark.implicits._
 
     val docs = Tables.documentsSpread(spark, d)

@@ -19,6 +19,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** The host's core count — `SPARK_GRAFT_CPUS` when set, else the JVM's
+    * available processors. Every main sizes its session from this, so a
+    * 4-core host never runs a 32-slot session. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Token unique per (JVM, session instance) — layout-materializing
     * queries (q46/q47/v9b) write under it so no two sessions ever share
     * (and race on) a directory or catalog name. */

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Fused cosine similarity over two `array<float>` columns — a native
   * Catalyst expression with whole-stage codegen.
@@ -93,20 +92,11 @@ object GraftFunctions {
   private val cosineInfo = new ExpressionInfo(
     classOf[CosineSimilarity].getName, "cosine_similarity")
 
-  /** Register into an existing session (tests, Verify, Bench). */
+  /** Register the `cosine_similarity` SQL name into an existing session
+    * (queries call the expression directly; only SQL text needs this). */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("cosine_similarity"),
       cosineInfo,
       (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)))
-}
-
-/** `SparkSessionExtensions` injector — enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
 }

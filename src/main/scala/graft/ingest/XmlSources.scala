@@ -6,15 +6,13 @@ import java.time.OffsetDateTime
 import scala.util.Try
 import scala.xml.{Elem, Node, XML}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-
 import graft.model.{Observation, Station, Units, UsStates}
 
 /** XML decoders for the NOAA station index and METAR observation feeds.
   *
   * Parsing is a pure String → Seq[row] function run on the driver (the
   * feeds are single ~MB documents fetched hourly — not a distributed
-  * concern; SURVEY §2.1 S4/S5); the resulting Datasets are distributed.
+  * concern; SURVEY §2.1 S4/S5); callers distribute the resulting rows.
   * For huge XML corpora the same parse functions drop into
   * `spark.read.textFile(...).mapPartitions` unchanged.
   */
@@ -90,15 +88,5 @@ object XmlSources {
         dewpoint_value = text(m, "dewpoint_c").flatMap(s => Try(s.toDouble).toOption),
         dewpoint_unit_code = Units.Celsius)
     }
-  }
-
-  def stationsDataset(spark: SparkSession, xml: String): Dataset[Station] = {
-    import spark.implicits._
-    spark.createDataset(parseStations(xml))
-  }
-
-  def metarsDataset(spark: SparkSession, xml: String): Dataset[Observation] = {
-    import spark.implicits._
-    spark.createDataset(parseMetars(xml))
   }
 }

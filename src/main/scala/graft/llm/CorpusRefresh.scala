@@ -24,7 +24,7 @@ import graft.store.GenLedger
   * merge two old clusters (no per-batch shortcut is exact) — but that
   * state is id-keyed rows (verified pair endpoints, hash→keeper rows),
   * orders of magnitude smaller than the corpus text the from-scratch
-  * run re-reads. RefreshScaleProbe measures the split.
+  * run re-reads. SCALING.md records the measured split.
   *
   * On-disk state under `dir`, all append-only parquet with the
   * [[graft.store.GenLedger]] generation discipline (`_gen_<n>` counter

@@ -52,7 +52,7 @@ import graft.queries.VectorOps
   * `sig` — shuffle keyed on the bucket, ledger pruned to touched
   * buckets; affected existing vectors rejoin only their STORED k rows
   * plus batch edges. Per-batch work is `batch × bucket-occupancy +
-  * affected × k`, never corpus-sized; IndexScaleProbe measures the
+  * affected × k`, never corpus-sized; SCALING.md records the measured
   * 1×→10× pair.
   */
 object KnnGraphIndex {

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Connected components over a near-dup pair graph — the step between
   * pair generation (d2/d4/d6/v4) and actually deduplicating a corpus:
@@ -16,14 +17,38 @@ import org.apache.spark.sql.functions._
   * node, nothing quadratic, no driver-side graph. This is the standard
   * large-scale CC shape (the simple form of the small-star/large-star
   * map-reduce algorithms).
+  *
+  * Input contract, shared by every variant below:
+  *  - the first two columns are the edge endpoints and must be integral
+  *    (byte, short, int or long); any other type is rejected up front
+  *    with an `IllegalArgumentException` naming the column, instead of
+  *    being cast to long (a fractional or string id would turn into
+  *    null and its edge would silently vanish);
+  *  - null is not a node. An edge with ONE null endpoint is read as a
+  *    self-pair of its other endpoint, so that node is present and
+  *    labels itself unless other edges connect it; an edge with two
+  *    null endpoints contributes nothing.
   */
 object Components {
+
+  private val IntegralIds: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** The two endpoint columns of `pairs`, after checking they are
+    * integral (see the object doc). */
+  private def endpoints(pairs: DataFrame): (String, String) = {
+    val Array(a, b) = pairs.schema.fields.take(2)
+    for (f <- Seq(a, b))
+      require(IntegralIds(f.dataType),
+        s"connected components need integral node ids (byte, short, int or long); " +
+          s"column `${f.name}` is ${f.dataType.simpleString}")
+    (a.name, b.name)
+  }
 
   /** @param pairs two-column DataFrame of undirected edges (a, b)
     * @return (node, component) — component = min node id reachable */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    val Seq(ca, cb) = pairs.columns.toSeq.take(2)
+    val (ca, cb) = endpoints(pairs)
     // Materialize the PAIR INPUT eagerly before anything fans out: the
     // symmetric edge list consumes it twice, and callers feed
     // corpus-priced pipelines (LSH + verify) whose double evaluation
@@ -45,8 +70,11 @@ object Components {
     val part = new org.apache.spark.HashPartitioner(parts)
     // keyed by the LABEL SOURCE endpoint: edge (v -> u) delivers v's
     // label to u; both directions present, so keys cover every node
-    val sym = p0.select(col("u").cast("long"), col("v").cast("long"))
-      .na.drop() // a null endpoint can never join a label anyway
+    // null rule (object doc): a half-null edge becomes a self-pair of
+    // its other endpoint; an all-null edge is dropped
+    val sym = p0.select(coalesce(col("u"), col("v")).cast("long"),
+        coalesce(col("v"), col("u")).cast("long"))
+      .na.drop()
       .rdd.flatMap { r =>
         val a = r.getLong(0); val b = r.getLong(1)
         Iterator((a, b), (b, a))
@@ -185,7 +213,7 @@ object Components {
   private def connectedComponentsStarImpl(pairs: DataFrame,
       maxIters: Int, roster: Boolean): (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    val Seq(ca, cb) = pairs.columns.toSeq.take(2)
+    val (ca, cb) = endpoints(pairs)
     // One eager materialization of the raw pair input: the node roster
     // consumes it twice and the canonical edge set once — three
     // evaluations of the caller's pair pipeline (m6's band joins, d13b's
@@ -201,6 +229,7 @@ object Components {
       if (!roster) null
       else p0.select(col("pu").as("node"))
         .unionByName(p0.select(col("pv").as("node")))
+        .where(col("node").isNotNull)
         .distinct()
         .localCheckpoint(true)
     // The fixpoint LOOP runs on RDD[(Long, Long)], not DataFrames —
@@ -219,7 +248,10 @@ object Components {
     // fixpoint test, same labels — ComponentsSpec pins all of it,
     // including round counts and union-find ground truth).
     // `greatest/least` coerce the two columns; the loop works in long
-    // and the output casts back to that coerced type.
+    // and the output casts back to that coerced type. Both skip nulls, so
+    // a half-null edge canonicalizes to a self-pair and drops here (its
+    // endpoint stays in the roster) and an all-null edge drops on the
+    // null comparison — the object doc's null rule.
     val canon = p0
       .select(greatest(col("pu"), col("pv")).as("u"), least(col("pu"), col("pv")).as("v"))
       .where(col("u") =!= col("v"))

@@ -191,4 +191,44 @@ class ComponentsSpec extends AnyFunSuite {
     assert((0L to 3L).forall(got(_) == 0L))
     assert((10L to 13L).forall(got(_) == 10L))
   }
+
+  test("non-integral node ids are rejected up front by both variants") {
+    val inputs = Seq(
+      Seq((1.5, 2.0)).toDF("a", "b") -> ("`a`", "double"),
+      Seq(("1", "2")).toDF("a", "b") -> ("`a`", "string"),
+      Seq((1L, "x")).toDF("a", "b") -> ("`b`", "string"))
+    for ((df, (column, tpe)) <- inputs) {
+      val variants = Seq[(String, () => Unit)](
+        "hash-min" -> (() => Components.connectedComponents(df).collect()),
+        "star" -> (() => Components.connectedComponentsStar(df).collect()),
+        "star children" -> (() => Components.connectedComponentsStarChildren(df).collect()))
+      for ((name, run) <- variants) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(column) && e.getMessage.contains(tpe),
+          s"$name on ${df.schema.simpleString}: ${e.getMessage}")
+      }
+    }
+    // every integral width is accepted, mixed widths included
+    val narrow = Seq((1.toShort, 2), (3.toShort, 3)).toDF("a", "b")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toMap
+    assert(labels(Components.connectedComponents(narrow)) == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    assert(labels(Components.connectedComponentsStar(narrow)) == labels(Components.connectedComponents(narrow)))
+  }
+
+  test("half-null edges: both variants follow the one null-endpoint rule") {
+    // a null endpoint is not a node; the other endpoint of a half-null
+    // edge is present and labels itself unless other edges connect it;
+    // an all-null edge contributes nothing
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(4L)), (Some(3L), None),
+      (None, Some(5L)), (None, None), (Some(4L), None))
+    val df = edges.toDF("a", "b")
+    def labels(out: org.apache.spark.sql.DataFrame): Map[Any, Any] =
+      out.collect().map(r => r.get(0) -> r.get(1)).toMap
+    val hashMin = labels(Components.connectedComponents(df))
+    val star = labels(Components.connectedComponentsStar(df))
+    assert(hashMin == star)
+    assert(star == Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 3L -> 3L, 5L -> 5L))
+  }
 }
